@@ -636,10 +636,9 @@ _ANN_QUERIES = 5
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # exact cosine top-k via the vectorized brute-force kernel (fold-order
-    # numpy scoring + per-batch top-k; bit-identical cosines and ranks to
-    # the former zip_with/aggregate column, which was interpreted per array
-    # element). exclude_self reproduces the pre-window vec_id != q_id filter.
+    # exact cosine top-k via the vectorized brute-force kernel (left-fold
+    # numpy cosine over whole Arrow batches + per-batch top-k).
+    # exclude_self reproduces the pre-window vec_id != q_id filter.
     from deduplicate_spark.functions.similarity import brute_force_topk
 
     emb = _t(spark, sf_dir, "embeddings").select(
@@ -675,9 +674,9 @@ FROM ranked WHERE rnk <= {_ANN_K}
 # --------------------------------------------------------------------------
 # Similarity search: IVF-partitioned ANN top-k (embeddings table).
 # The inverted-file scale path beside the SRP-LSH one: corpus vectors are
-# assigned to coarse cells by a zero-shuffle literal-centroid projection,
-# queries probe their nprobe nearest cells, exact re-rank touches only the
-# probed cells. Quantizer = the n_cells smallest-id vectors (deterministic
+# assigned to coarse cells inside one shuffle-free corpus kernel, queries
+# probe their nprobe nearest cells, exact re-rank touches only the probed
+# cells. Quantizer = the n_cells smallest-id vectors (deterministic
 # + SQL-expressible, so the whole approximate path is hash-comparable);
 # production swaps in the sampled k-means|| quantizer (same contract).
 # Output is (q_id, neighbor_id, rnk) — ranks, not float cosines, so the

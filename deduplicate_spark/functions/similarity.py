@@ -1,55 +1,50 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-  * brute-force cosine top-k — exact baseline; broadcast the query set,
-    native zip_with/aggregate dot products, window top-k. O(N*Q) but fully
-    JVM-side and embarrassingly parallel: correct choice when Q is small.
-  * LSH-bucketed ANN (random hyperplane / SRP) — a scale path: docs and
-    queries hash to sign-pattern buckets; candidates = bucket collisions
-    across any of ``n_tables`` hash tables; exact cosine re-rank on
-    candidates only. Sub-linear candidate volume at 100 TB scale, tunable
-    recall via (n_tables, n_bits).
-  * IVF-partitioned ANN — the other scale path: a tiny coarse-centroid
-    table partitions the corpus into inverted-file cells (zero-shuffle
-    literal projection, or a matmul kernel for large cell counts); each
-    query probes its ``nprobe`` nearest cells and re-ranks exactly only
-    inside them. Deterministic smallest-id quantizer for oracle-able
-    tests; k-means|| (Spark ML, sampled) for production.
+Four entry points, one cosine. Every cosine in this module comes from the
+same numpy kernel over whole Arrow batches (:func:`_fold_dot`): each dot
+product and squared norm is folded left to right over index 0..d-1, so a
+pair scores the same bits whichever path scores it.
 
-The hyperplane projection is a vectorized pandas UDF (numpy matmul over
-Arrow batches); everything relational stays native.
+  * brute-force top-k — exact baseline: the query set rides into a
+    mapInPandas closure and every corpus batch is scored against all of
+    it. O(N*Q), the right choice when Q is small.
+  * SRP-LSH top-k (``ann_topk``) — docs and queries hash to random
+    hyperplane sign-pattern buckets; candidates are bucket collisions in
+    any of ``n_tables`` tables, re-ranked exactly. Sub-linear candidate
+    volume, recall tunable via (n_tables, n_bits).
+  * IVF top-k — a small coarse-centroid table partitions the corpus into
+    inverted-file cells; each query probes its ``nprobe`` nearest cells
+    and is scored only inside them. Deterministic smallest-id quantizer
+    for oracle-able tests; seeded k-means++ over a bounded sample for
+    production.
+  * embedding dup pairs — the SRP bucket self-join, exact cosine
+    >= threshold on the candidates only.
+
+Malformed vectors follow one rule, applied by the shared helpers
+(:func:`_valid`, :func:`_collect_queries`):
+  * a null or wrong-length corpus vector is dropped by a native filter
+    before any kernel runs;
+  * a zero-norm vector gets a null cosine, so it is never a dup pair and
+    ranks last;
+  * a null or wrong-length query vector raises ``ValueError`` on the
+    driver, naming its query id. So does a query set larger than
+    ``MAX_QUERIES``.
+
+Everything relational (bucket joins, dedup, the rank window) stays native.
 """
 
 from __future__ import annotations
 
+import collections
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(c: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Native cosine similarity between two array<double> columns."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _foldorder_sq_norms(mat: np.ndarray) -> np.ndarray:
-    """sqrt of the LEFT-FOLD sum of squares per row — the exact summation
-    order of :func:`_norm` (``F.aggregate`` folds the array left-to-right),
-    so the result is bit-identical to the JVM expression."""
-    acc = np.zeros(mat.shape[0])
-    for i in range(mat.shape[1]):
-        acc = acc + mat[:, i] * mat[:, i]
-    return np.sqrt(acc)
-
+# the query set is collected to the driver and rides in every task's
+# closure: 100k queries at d=128 is ~100 MB of float64 per task
+MAX_QUERIES = 100_000
 
 # fold-order accumulator tile: the d-step left-fold reads+writes the
 # whole (rows x queries) accumulator once per dimension, so an untiled
@@ -60,67 +55,141 @@ def _foldorder_sq_norms(mat: np.ndarray) -> np.ndarray:
 _FOLD_TILE = 256
 
 
-def _foldorder_cosine_matrix(
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``sum_i a[..., i] * b[..., i]``, folded left over i = 0..d-1, with
+    the leading axes of ``a`` and ``b`` broadcast. The fixed summation
+    order makes a pair's cosine the same bits whichever path, batch or
+    tile scores it (a BLAS dot product would not: its order depends on
+    the matrix shape)."""
+    shape = np.broadcast_shapes(a.shape[:-1], b.shape[:-1])
+    acc = np.zeros(shape)
+    buf = np.empty(shape)
+    for i in range(a.shape[-1]):
+        np.multiply(a[..., i], b[..., i], out=buf)
+        acc += buf
+    return acc
+
+
+def _norms(mat: np.ndarray) -> np.ndarray:
+    return np.sqrt(_fold_dot(mat, mat))
+
+
+def _cosine(dot: np.ndarray, na: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    # a zero norm gives NaN, which Arrow emits as a null cosine
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dot / (na * nb)
+
+
+def _pair_cosine(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two (pairs x d) matrices."""
+    return _cosine(_fold_dot(a, b), _norms(a), _norms(b))
+
+
+def _cosine_matrix(
     mat: np.ndarray, qmat: np.ndarray, qnorm: np.ndarray | None = None
 ) -> np.ndarray:
-    """(rows x queries) cosine matrix with the EXACT left-fold summation
-    order of :func:`cosine_sim` — dot folds products index 0..d-1, the
-    denominator is norm(q) * norm(v) — so every value is bit-identical to
-    the higher-order-function column this replaces (guide §4.2: same math,
-    vectorized in numpy instead of interpreted per array element)."""
-    b, d = mat.shape
-    q = qmat.shape[0]
-    dot = np.empty((b, q))
+    """(rows x queries) cosine matrix, computed in cache-resident tiles."""
+    dot = np.empty((mat.shape[0], qmat.shape[0]))
     t = _FOLD_TILE
-    tmp = np.empty((t, t))
-    for i0 in range(0, b, t):
-        i1 = min(i0 + t, b)
-        for j0 in range(0, q, t):
-            j1 = min(j0 + t, q)
-            acc = np.zeros((i1 - i0, j1 - j0))
-            buf = tmp[: i1 - i0, : j1 - j0]
-            for i in range(d):
-                np.multiply(mat[i0:i1, i, None], qmat[None, j0:j1, i], out=buf)
-                acc += buf
-            dot[i0:i1, j0:j1] = acc
-    vnorm = _foldorder_sq_norms(mat)
-    if qnorm is None:
-        qnorm = _foldorder_sq_norms(qmat)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return dot / (qnorm[None, :] * vnorm[:, None])
+    for i0 in range(0, mat.shape[0], t):
+        for j0 in range(0, qmat.shape[0], t):
+            dot[i0 : i0 + t, j0 : j0 + t] = _fold_dot(
+                mat[i0 : i0 + t, None, :], qmat[None, j0 : j0 + t, :]
+            )
+    qnorm = _norms(qmat) if qnorm is None else qnorm
+    return _cosine(dot, _norms(mat)[:, None], qnorm[None, :])
 
 
-def _batch_topk_frames(
-    ids: np.ndarray,
-    cos: np.ndarray,
-    qids: np.ndarray,
-    k: int,
-    exclude: np.ndarray | None = None,
-):
-    """Per-batch top-k SUPERSET per query: every row whose rank key is
-    within the batch's k-th smallest, INCLUDING boundary ties — a
-    provable superset of the batch's true top-k under Spark's
-    (cosine DESC NaN-first, id ASC) window order, selected with one
-    O(rows) column partition instead of a full per-column sort (measured:
-    the argsort was ~1 s/batch at 2048 x 5000). Boundary ties and
-    sub-threshold extras are ranked out by the final window; ``exclude``
-    rows are dropped outright. Returns (q, nid, cos) arrays."""
-    b = ids.shape[0]
+def _stack(col: pd.Series, dim: int) -> np.ndarray:
+    """One Arrow batch's vector column as a float64 (rows x dim) matrix."""
+    if len(col) == 0:
+        return np.empty((0, dim))
+    return np.stack([np.asarray(v, dtype=np.float64) for v in col])
+
+
+def _valid(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
+    """Drop null and wrong-length vectors (``size`` of null is not dim)."""
+    return df.filter(F.size(vec_col) == dim)
+
+
+def _collect_queries(
+    queries: DataFrame, query_id_col: str, vec_col: str, dim: int | None = None
+) -> tuple[np.ndarray, np.ndarray, int]:
+    """(query ids, float64 query matrix, dim) on the driver. Without a
+    given ``dim`` the length most queries share is expected. Collecting
+    ``MAX_QUERIES + 1`` rows detects an oversize query set without a
+    separate count."""
+    rows = queries.select(query_id_col, vec_col).limit(MAX_QUERIES + 1).collect()
+    if len(rows) > MAX_QUERIES:
+        raise ValueError(
+            f"more than {MAX_QUERIES} query vectors: the query set is "
+            "collected to the driver; score it in smaller batches"
+        )
+    if dim is None:
+        lens = collections.Counter(len(v) for _, v in rows if v is not None)
+        dim = lens.most_common(1)[0][0] if lens else 0
+    for qid, v in rows:
+        if v is None or len(v) != dim:
+            got = "null" if v is None else f"of length {len(v)}"
+            raise ValueError(
+                f"query {query_id_col}={qid!r}: vector is {got}, expected length {dim}"
+            )
+    qmat = np.array([r[1] for r in rows], dtype=np.float64).reshape(len(rows), dim)
+    return np.array([r[0] for r in rows]), qmat, dim
+
+
+def _block_top_k(
+    ids: np.ndarray, cos: np.ndarray, qids: np.ndarray, k: int, exclude_self: bool
+) -> pd.DataFrame:
+    """(q_id, neighbor_id, cosine) rows of a (rows x queries) cosine block:
+    per query, every row within the block's k-th best cosine, boundary
+    ties included — a superset of the block's top-k under the final window
+    order, picked with one O(rows) partition per column instead of a sort
+    (measured: the argsort was ~1 s/batch at 2048 x 5000). Every global
+    top-k row is top-k in its own block, so the final window loses
+    nothing. A NaN cosine ranks last, as its null does in the window;
+    ``exclude_self`` drops (q, q) pairs before the selection."""
+    drop = ids[:, None] == qids[None, :] if exclude_self else np.zeros(cos.shape, bool)
     key = -cos
-    # Spark's DESC total order puts NaN first; numpy sorts NaN last — map
-    # NaN to -inf so the batch-local selection agrees with the final window
-    np.copyto(key, -np.inf, where=np.isnan(key))
-    if exclude is not None:
-        key[exclude] = np.inf
-    if k < b:
-        thr = np.partition(key, k - 1, axis=0)[k - 1, :]  # (Q,)
-        mask = key <= thr[None, :]
+    key[np.isnan(key) | drop] = np.inf
+    if k < key.shape[0]:
+        keep = key <= np.partition(key, k - 1, axis=0)[k - 1]
     else:
-        mask = np.ones(key.shape, dtype=bool)
-    if exclude is not None:
-        mask &= ~exclude
-    qi, ri = np.nonzero(mask.T)
-    return qids[qi], ids[ri], cos[ri, qi]
+        keep = np.ones(key.shape, dtype=bool)
+    qi, ri = np.nonzero((keep & ~drop).T)
+    return pd.DataFrame({"q_id": qids[qi], "neighbor_id": ids[ri], "cosine": cos[ri, qi]})
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Rank (q_id, neighbor_id, cosine) rows per query by cosine DESC
+    (nulls last), then neighbor_id ASC, and keep the first k."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
+def _scan_top_k(
+    vectors: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    dim: int,
+    kernel,
+    k: int,
+) -> DataFrame:
+    """Run a corpus-scoring ``kernel`` (batches -> (q_id, neighbor_id,
+    cosine) frames) over the valid corpus rows, then rank."""
+    src = _valid(vectors.select(id_col, vec_col), vec_col, dim)
+    # parallelism floor: a bench-scale corpus is one parquet split, which
+    # would run the kernel on one core; at real scale the scan already has
+    # >= cores splits and takes no extra exchange (guide §2.4)
+    want = vectors.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < want:
+        src = src.repartition(want)
+    q_t = queries.schema[query_id_col].dataType.simpleString()
+    v_t = vectors.schema[id_col].dataType.simpleString()
+    scored = src.mapInPandas(kernel, f"q_id {q_t}, neighbor_id {v_t}, cosine double")
+    return _top_k(scored, k)
 
 
 def brute_force_topk(
@@ -136,65 +205,23 @@ def brute_force_topk(
 
     vectors(id_col, vec_col) x queries(query_id_col, vec_col) ->
     (q_id, neighbor_id, cosine, rnk). The query set rides into a
-    mapInPandas kernel closure (it was broadcast before — same memory
-    class); the corpus side stays a narrow, shuffle-free scan. The kernel
-    scores a whole Arrow batch against all queries with fold-order-exact
-    numpy (bit-identical cosines to the former zip_with/aggregate column,
-    which was interpreted per array element — guide §4.1/§4.2) and emits
-    only each batch's top-k per query, so the final window ranks
-    ~(batches x Q x k) rows instead of N x Q. Every global top-k row is
-    top-k within its own batch, so the reduction is lossless.
+    mapInPandas kernel closure; the corpus side stays a narrow,
+    shuffle-free scan. The kernel scores a whole Arrow batch against all
+    queries at once and emits only each batch's top-k per query, so the
+    final window ranks ~(batches x Q x k) rows instead of N x Q.
 
     ``exclude_self`` drops (q, q) pairs before ranking — the semantics of
     a pre-window ``id != q_id`` filter."""
-    q_rows = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>")
-    ).collect()
-    qids = np.array([r[0] for r in q_rows])
-    qmat = (
-        np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-        if q_rows
-        else np.zeros((0, 0))
-    )
-    qnorm = _foldorder_sq_norms(qmat) if q_rows else np.zeros(0)
+    qids, qmat, dim = _collect_queries(queries, query_id_col, vec_col)
+    qnorm = _norms(qmat)
 
     def kernel(batches):
         for pdf in batches:
-            if len(pdf) == 0 or qmat.shape[0] == 0:
-                continue
             ids = pdf[id_col].to_numpy()
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            cos = _foldorder_cosine_matrix(mat, qmat, qnorm)
-            # self pairs are dropped inside the selection — none reach the
-            # final window, the semantics of a pre-window id != q_id filter
-            excl = ids[:, None] == qids[None, :] if exclude_self else None
-            out_q, out_id, out_cos = _batch_topk_frames(
-                ids, cos, qids, k, exclude=excl
-            )
-            yield pd.DataFrame(
-                {"q_id": out_q, "neighbor_id": out_id, "cosine": out_cos}
-            )
+            cos = _cosine_matrix(_stack(pdf[vec_col], dim), qmat, qnorm)
+            yield _block_top_k(ids, cos, qids, k, exclude_self)
 
-    q_t = queries.schema[query_id_col].dataType.simpleString()
-    v_t = vectors.schema[id_col].dataType.simpleString()
-    src = vectors.select(F.col(id_col), vec_col)
-    # parallelism floor: a bench-scale corpus is one parquet split, which
-    # would run the kernel on one core; at real scale the scan already has
-    # >= cores splits and takes no extra exchange (guide §2.4)
-    npart = src.rdd.getNumPartitions()
-    want = vectors.sparkSession.sparkContext.defaultParallelism
-    if npart < want:
-        src = src.repartition(want)
-    scored = src.mapInPandas(
-        kernel, f"q_id {q_t}, neighbor_id {v_t}, cosine double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    return _scan_top_k(vectors, queries, id_col, vec_col, query_id_col, dim, kernel, k)
 
 
 def srp_signatures(
@@ -215,9 +242,7 @@ def srp_signatures(
         planes = rng.standard_normal((n_tables * n_bits, dim)).astype(np.float64)
         weights = (1 << np.arange(n_bits, dtype=np.int64))
         for pdf in batches:
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )  # (batch, dim)
+            mat = _stack(pdf[vec_col], dim)
             signs = (mat @ planes.T) > 0  # (batch, n_tables*n_bits)
             signs = signs.reshape(len(pdf), n_tables, n_bits)
             buckets = (signs * weights).sum(axis=2)  # (batch, n_tables)
@@ -249,7 +274,11 @@ def ann_topk(
     Recall rises with n_tables (union of candidates across tables) and
     falls with n_bits (finer buckets, fewer candidates). The bucket join
     shuffles on (table_id, bucket) — the A1-style collision prefilter of
-    the dedup cascade, reused for vectors."""
+    the dedup cascade, reused for vectors. Each candidate is scored by the
+    row-wise cosine kernel against its query, which rides in the closure."""
+    qids, qmat, _ = _collect_queries(queries, query_id_col, vec_col, dim)
+    qrow = {q: i for i, q in enumerate(qids.tolist())}
+    vectors = _valid(vectors, vec_col, dim)
     v_sig = srp_signatures(vectors, dim, n_tables, n_bits, id_col, vec_col, seed)
     q_sig = srp_signatures(queries, dim, n_tables, n_bits, query_id_col, vec_col, seed)
 
@@ -264,40 +293,19 @@ def ann_topk(
         .dropDuplicates(["q_id", "neighbor_id"])
     )
 
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("q_id"),
-        F.col(vec_col).cast("array<double>").alias("_q"),
-    )
-    scored = (
-        cand.join(v, "neighbor_id")
-        .join(F.broadcast(q), "q_id")
-        .select("q_id", "neighbor_id", cosine_sim(F.col("_q"), F.col("_v")).alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
-
-
-def _probe_cells(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
-    """array<int> of the ``nprobe`` nearest centroid cells for one vector
-    column, cosine-ranked (ties -> smaller cell id) — a PURE projection:
-    the centroid table rides into the plan as a literal array (tiny by
-    definition — a coarse quantizer is broadcastable or it is not a coarse
-    quantizer), so cell assignment costs ZERO shuffle on the corpus side."""
-    scored = F.array(
-        *[
-            F.struct(
-                (-cosine_sim(vec, F.array(*[F.lit(float(x)) for x in cv]))).alias("ncs"),
-                F.lit(cell).alias("cell"),
+    def kernel(batches):
+        for pdf in batches:
+            qm = qmat[[qrow[q] for q in pdf["q_id"]]]
+            cos = _pair_cosine(qm, _stack(pdf[vec_col], dim))
+            yield pd.DataFrame(
+                {"q_id": pdf["q_id"], "neighbor_id": pdf["neighbor_id"], "cosine": cos}
             )
-            for cell, cv in enumerate(centroids)
-        ]
+
+    v = vectors.select(F.col(id_col).alias("neighbor_id"), vec_col)
+    scored = cand.join(v, "neighbor_id").mapInPandas(
+        kernel, "q_id long, neighbor_id long, cosine double"
     )
-    ranked = F.array_sort(scored)  # struct order: ncs asc = cosine desc, then cell asc
-    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
+    return _top_k(scored, k)
 
 
 def ivf_centroids(
@@ -382,40 +390,27 @@ def ivf_centroids_kmeans(
     return [list(map(float, c)) for c in cents]
 
 
-def ivf_assign_kernel(
-    df: DataFrame,
-    centroids: list[list[float]],
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_vec: bool = False,
-) -> DataFrame:
-    """(id, cells array<int>[, _v array<double>]) via one numpy matmul per
-    Arrow batch — the kernel form of :func:`_probe_cells` for LARGE cell
-    counts, where n_cells literal fold-expressions would bloat codegen (the
-    native projection is linear in n_cells per row; the matmul is one BLAS
-    call). Same argmax-of-cosine semantics, ties -> smaller cell.
-    ``keep_vec`` passes the vector through so downstream re-rank needs no
-    join back to the source table (mapInPandas is a narrow transform — the
-    corpus side still never shuffles)."""
-    cmat = np.asarray(centroids, dtype=np.float64)
-    cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
 
-    def kernel(batches):
-        for pdf in batches:
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+def _ivf_cells(mat: np.ndarray, cmat: np.ndarray, n: int, use_kernel: bool) -> np.ndarray:
+    """The ``n`` nearest cells of each row by cosine, ties -> smaller cell.
+    Two arithmetics, each used alike on the driver (queries) and on the
+    executors (corpus): the matmul form (normalize + one BLAS call) for
+    large cell counts, or the fold-order cosine. A zero-norm row lands in
+    cell 0 and scores null against every query."""
+    if use_kernel:
+        with np.errstate(divide="ignore", invalid="ignore"):
             nmat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            cs = nmat @ cmat.T  # (batch, n_cells)
-            # stable argsort on -cs: cosine desc, ties -> smaller cell
-            top = np.argsort(-cs, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-            out = {"vid": pdf[id_col].to_numpy(), "cells": list(top)}
-            if keep_vec:
-                out["_v"] = list(mat)
-            yield pd.DataFrame(out)
+            cs = nmat @ (cmat / np.linalg.norm(cmat, axis=1, keepdims=True)).T
+    else:
+        cs = _cosine_matrix(mat, cmat)
+    return np.argsort(-cs, axis=1, kind="stable")[:, :n]
 
-    id_t = df.schema[id_col].dataType.simpleString()
-    schema = f"vid {id_t}, cells array<int>" + (", _v array<double>" if keep_vec else "")
-    return df.select(F.col(id_col), vec_col).mapInPandas(kernel, schema)
+
+def _groups(keys: np.ndarray) -> dict:
+    """{key: ascending positions of ``keys`` holding it}."""
+    order = np.argsort(keys, kind="stable")
+    uniq, starts = np.unique(keys[order], return_index=True)
+    return dict(zip(uniq.tolist(), np.split(order, starts[1:])))
 
 
 def ivf_topk(
@@ -435,136 +430,49 @@ def ivf_topk(
     to its nearest coarse cell, each query probes its ``nprobe`` nearest
     cells, and the exact cosine re-rank touches only vectors in probed
     cells (~nprobe / n_cells of the corpus per query instead of all of
-    it). Assignment + scoring + batch-local top-k run in ONE mapInPandas
-    pass over the corpus — a narrow, shuffle-free transform (the former
-    probe attach was a broadcast join producing a candidate-pair row per
-    scored pair, whose zip_with/aggregate cosine was interpreted per array
-    element — guide §4.1); queries and centroids ride in the closure.
-    Only ~(batches x Q x k) ranked candidates reach the final window, and
-    every global top-k row is top-k within its batch, so the reduction is
-    lossless.
+    it). Assignment, scoring and block-local top-k run in ONE mapInPandas
+    pass over the corpus — a narrow, shuffle-free transform; queries and
+    centroids ride in the closure.
 
-    ``assign_via_kernel`` (default: auto, > 64 cells) selects which
-    assignment ARITHMETIC is replicated bit-exactly: the matmul kernel
-    form (normalize + BLAS + stable argsort, :func:`ivf_assign_kernel`)
-    or the literal fold-expression form (:func:`_probe_cells` — fold-order
-    cosine, ties -> smaller cell). Same argmax-of-cosine semantics."""
-    cents = centroids if centroids is not None else ivf_centroids(vectors, n_cells, id_col, vec_col)
-    use_kernel = assign_via_kernel if assign_via_kernel is not None else len(cents) > 64
-    cmat = np.asarray(cents, dtype=np.float64)
-
-    # queries ride into the kernel closure (they were broadcast before —
-    # same memory class). Their probe cells are computed driver-side with
-    # the SAME arithmetic the chosen assignment mode used on executors:
-    # kernel mode = normalize + matmul + stable argsort of -cs (exactly
-    # ivf_assign_kernel); literal mode = fold-order cosine + (ncs, cell)
-    # ascending sort (exactly _probe_cells). Bit-identical assignments.
-    q_rows = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>")
-    ).collect()
-    qids = np.array([r[0] for r in q_rows])
-    qmat = (
-        np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-        if q_rows
-        else np.zeros((0, cmat.shape[1] if cmat.ndim == 2 else 0))
+    ``assign_via_kernel`` (default: auto, > 64 cells) selects the
+    assignment arithmetic of :func:`_ivf_cells`: the matmul form or the
+    fold-order cosine. Same argmax-of-cosine semantics; queries and
+    corpus always use the same one."""
+    qids, qmat, dim = _collect_queries(
+        queries, query_id_col, vec_col, len(centroids[0]) if centroids else None
     )
-    npr = min(nprobe, cmat.shape[0])
-    if use_kernel:
-        cnorm = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-        if qmat.shape[0]:
-            qn = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-            qcells = np.argsort(-(qn @ cnorm.T), axis=1, kind="stable")[:, :npr]
-        else:
-            qcells = np.zeros((0, npr), dtype=np.int64)
-    else:
-        qncs = -_foldorder_cosine_matrix(qmat, cmat)  # (Q, C)
-        qcells = np.argsort(qncs, axis=1, kind="stable")[:, :npr]
-    qnorm = _foldorder_sq_norms(qmat) if qmat.shape[0] else np.zeros(0)
+    if centroids is None:
+        centroids = ivf_centroids(_valid(vectors, vec_col, dim), n_cells, id_col, vec_col)
+    use_kernel = assign_via_kernel if assign_via_kernel is not None else len(centroids) > 64
+    cmat = np.asarray(centroids, dtype=np.float64).reshape(len(centroids), dim)
+    qnorm = _norms(qmat)
     # inverted probe lists: cell -> indices of the queries probing it
-    cell_queries: dict[int, np.ndarray] = {}
-    if qmat.shape[0]:
-        flat_cells = qcells.ravel()
-        flat_q = np.repeat(np.arange(qcells.shape[0]), qcells.shape[1])
-        srt = np.argsort(flat_cells, kind="stable")
-        uc, starts = np.unique(flat_cells[srt], return_index=True)
-        for c, s, e in zip(
-            uc, starts, np.append(starts[1:], flat_cells.shape[0])
-        ):
-            cell_queries[int(c)] = flat_q[srt[s:e]]
+    qcells = _ivf_cells(qmat, cmat, nprobe, use_kernel)
+    probes = {
+        c: pos // qcells.shape[1] for c, pos in _groups(qcells.ravel()).items()
+    }
 
     def kernel(batches):
         for pdf in batches:
-            if len(pdf) == 0 or qmat.shape[0] == 0:
-                continue
             ids = pdf[id_col].to_numpy()
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            # cell assignment, mode-exact (see driver-side comment)
-            if use_kernel:
-                nmat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-                cell = np.argsort(-(nmat @ cnorm.T), axis=1, kind="stable")[:, 0]
-            else:
-                ncs = -_foldorder_cosine_matrix(mat, cmat)
-                cell = np.argsort(ncs, axis=1, kind="stable")[:, 0]
+            mat = _stack(pdf[vec_col], dim)
             # score each row ONLY against the queries probing its cell —
             # the IVF contract: ~nprobe/n_cells of the pairs, never N x Q
-            per_q_ids: dict[int, list] = {}
-            per_q_cos: dict[int, list] = {}
-            order = np.argsort(cell, kind="stable")
-            uc, starts = np.unique(cell[order], return_index=True)
-            for c, s, e in zip(uc, starts, np.append(starts[1:], cell.shape[0])):
-                q_idx = cell_queries.get(int(c))
-                if q_idx is None:
-                    continue
-                rows = order[s:e]
-                cos = _foldorder_cosine_matrix(mat[rows], qmat[q_idx], qnorm[q_idx])
-                for j, qi in enumerate(q_idx):
-                    per_q_ids.setdefault(int(qi), []).append(ids[rows])
-                    per_q_cos.setdefault(int(qi), []).append(cos[:, j])
-            if not per_q_ids:
-                continue
-            out_q, out_id, out_cos = [], [], []
-            for qi, id_chunks in per_q_ids.items():
-                cid = np.concatenate(id_chunks)
-                cco = np.concatenate(per_q_cos[qi])
-                keep = cid != qids[qi]
-                cid, cco = cid[keep], cco[keep]
-                if cid.shape[0] == 0:
-                    continue
-                # k-th-smallest threshold INCLUDING boundary ties — a
-                # superset of this batch's true top-k under the window
-                # order; extras are ranked out by the final window
-                if cid.shape[0] > k:
-                    key = -cco
-                    np.copyto(key, -np.inf, where=np.isnan(key))
-                    sel = key <= np.partition(key, k - 1)[k - 1]
-                    cid, cco = cid[sel], cco[sel]
-                out_q.append(np.full(cid.shape[0], qids[qi]))
-                out_id.append(cid)
-                out_cos.append(cco)
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_id),
-                    "cosine": np.concatenate(out_cos),
-                }
-            )
+            blocks = [
+                _block_top_k(
+                    ids[rows],
+                    _cosine_matrix(mat[rows], qmat[q_idx], qnorm[q_idx]),
+                    qids[q_idx],
+                    k,
+                    exclude_self=True,
+                )
+                for c, rows in _groups(_ivf_cells(mat, cmat, 1, use_kernel)[:, 0]).items()
+                if (q_idx := probes.get(c)) is not None
+            ]
+            if blocks:
+                yield pd.concat(blocks, ignore_index=True)
 
-    q_t = queries.schema[query_id_col].dataType.simpleString()
-    v_t = vectors.schema[id_col].dataType.simpleString()
-    src = vectors.select(F.col(id_col), vec_col)
-    npart = src.rdd.getNumPartitions()
-    want = vectors.sparkSession.sparkContext.defaultParallelism
-    if npart < want:
-        src = src.repartition(want)
-    scored = src.mapInPandas(
-        kernel, f"q_id {q_t}, neighbor_id {v_t}, cosine double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return _scan_top_k(vectors, queries, id_col, vec_col, query_id_col, dim, kernel, k)
 
 
 def embedding_dup_pairs(
@@ -578,7 +486,9 @@ def embedding_dup_pairs(
     seed: int = 42,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b, cosine >= threshold) —
-    the semantic-dedup edge source, LSH-bucketed so it never goes O(N^2)."""
+    the semantic-dedup edge source, LSH-bucketed so it never goes O(N^2).
+    Candidates are scored by the row-wise cosine kernel."""
+    vectors = _valid(vectors, vec_col, dim)
     sig = srp_signatures(vectors, dim, n_tables, n_bits, id_col, vec_col, seed)
     cand = (
         sig.alias("l")
@@ -587,10 +497,16 @@ def embedding_dup_pairs(
         .select(F.col("l.vid").alias("a"), F.col("r.vid").alias("b"))
         .dropDuplicates(["a", "b"])
     )
-    v = vectors.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
+
+    def kernel(batches):
+        for pdf in batches:
+            cos = _pair_cosine(_stack(pdf["_va"], dim), _stack(pdf["_vb"], dim))
+            yield pd.DataFrame({"a": pdf["a"], "b": pdf["b"], "cosine": cos})
+
     return (
-        cand.join(v.select(F.col(id_col).alias("a"), F.col("_v").alias("_va")), "a")
-        .join(v.select(F.col(id_col).alias("b"), F.col("_v").alias("_vb")), "b")
-        .select("a", "b", cosine_sim(F.col("_va"), F.col("_vb")).alias("cosine"))
+        cand.join(vectors.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va")), "a")
+        .join(vectors.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb")), "b")
+        .select("a", "b", "_va", "_vb")
+        .mapInPandas(kernel, "a long, b long, cosine double")
         .filter(F.col("cosine") >= threshold)
     )

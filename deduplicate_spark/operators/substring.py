@@ -221,9 +221,11 @@ def has_common_substring_ge(ta: str, tb: str, t: int, w: int, cap: int | None) -
     the stage wall (measured at a 29k-doc word-salad corpus: 423k
     candidates, ~1 ms/pair, 0 confirmed). Falls back to the exact
     suffix-array LCS when the seed budget is exhausted (pathologically
-    repetitive docs) or when either text exceeds the fingerprint cap
-    (the guarantee then no longer covers the truncated tail). Decision is
-    exactly ``longest_common_substring_len(ta, tb) >= t`` in all cases.
+    repetitive docs), when either text exceeds the fingerprint cap (the
+    guarantee then no longer covers the truncated tail), or when either
+    text is whitespace-only (it has no window hashes, yet a long blank run
+    can still be shared). Decision is exactly
+    ``longest_common_substring_len(ta, tb) >= t`` in all cases.
     """
     if not ta or not tb:
         return False
@@ -231,6 +233,8 @@ def has_common_substring_ge(ta: str, tb: str, t: int, w: int, cap: int | None) -
         return longest_common_substring_len(ta, tb) >= t
     raw_a = _raw_window_hashes(ta, w, None)
     raw_b = _raw_window_hashes(tb, w, None)
+    if raw_a.size == 0 or raw_b.size == 0:
+        return longest_common_substring_len(ta, tb) >= t
     shared = np.intersect1d(
         _winnow_from_raw(raw_a, t, w), _winnow_from_raw(raw_b, t, w),
         assume_unique=True,

@@ -308,6 +308,11 @@ def test_seed_extend_verifier_equals_suffix_array_lcs():
     # edges
     cases.append(("", salad(20)))
     cases.append(("short", "short"))
+    # whitespace-only texts have no window hashes; a shared blank run of
+    # >= t bytes is still a common substring
+    cases.append((" " * 200, " " * 150))
+    cases.append((" " * 200, "x" + " " * 150 + "y"))
+    cases.append(("\n" * 100, "\n" * 100))
     for ta, tb in cases:
         want = longest_common_substring_len(ta, tb) >= t
         got = has_common_substring_ge(ta, tb, t, w, cap=200_000)

@@ -1,16 +1,18 @@
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from deduplicate_spark.functions import similarity
 from deduplicate_spark.functions.similarity import (
+    _cosine_matrix,
+    _pair_cosine,
     ann_topk,
     brute_force_topk,
-    cosine_sim,
     embedding_dup_pairs,
-    ivf_assign_kernel,
-    ivf_centroids,
     ivf_centroids_kmeans,
     ivf_topk,
 )
@@ -29,13 +31,36 @@ def vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>").cache()
 
 
-def test_cosine_sim_column(spark):
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0])],
-        "a array<double>, b array<double>",
+def _queries(vectors):
+    return vectors.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), "embedding"
     )
-    got = [round(r[0], 6) for r in df.select(cosine_sim(F.col("a"), F.col("b"))).collect()]
-    assert got == [1.0, 0.0]
+
+
+def _python_fold_cosine(a, b) -> float:
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot = dot + x * y
+    for x in a:
+        na = na + x * x
+    for y in b:
+        nb = nb + y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+def test_pair_cosine_matches_python_left_fold():
+    # the module's one cosine: a left fold over index 0..d-1, bit for bit,
+    # in both the row-wise pair form and the tiled matrix form
+    rng = np.random.default_rng(11)
+    a = rng.standard_normal((300, 33))
+    b = rng.standard_normal((300, 33)) * 1e3
+    want = [_python_fold_cosine(x, y) for x, y in zip(a.tolist(), b.tolist())]
+    assert _pair_cosine(a, b).tolist() == want
+    mat = _cosine_matrix(a, b[:260])  # 300 x 260 crosses the 256 tile edge
+    assert mat[np.arange(260), np.arange(260)].tolist() == want[:260]
+    assert mat[299, 259] == _python_fold_cosine(a[299].tolist(), b[259].tolist())
+    # a zero-norm vector has no cosine
+    assert np.isnan(_pair_cosine(np.zeros((1, 3)), np.ones((1, 3))))[0]
 
 
 def test_brute_force_topk_finds_planted(vectors):
@@ -76,24 +101,14 @@ def test_ivf_topk_recalls_planted(vectors):
     assert all(len(v) <= 3 for v in by_q.values())
 
 
-def test_ivf_kernel_assignment_matches_native(vectors):
-    # the matmul kernel and the literal-centroid projection implement the
-    # same argmax; their cell assignments must agree on real data
-    cents = ivf_centroids(vectors, 6)
-    kern = {
-        r["vid"]: list(r["cells"])
-        for r in ivf_assign_kernel(vectors, cents, nprobe=2).collect()
-    }
-    from deduplicate_spark.functions.similarity import _probe_cells
+def test_ivf_assignment_modes_agree(vectors):
+    # the matmul and the fold-order cosine implement the same argmax; the
+    # rows they produce must agree on real data
+    def rows(mode):
+        top = ivf_topk(vectors, _queries(vectors), n_cells=6, nprobe=2, k=3, assign_via_kernel=mode)
+        return sorted(tuple(r) for r in top.collect())
 
-    native = {
-        r["vec_id"]: list(r["cells"])
-        for r in vectors.select(
-            "vec_id",
-            _probe_cells(F.col("embedding"), cents, 2).alias("cells"),
-        ).collect()
-    }
-    assert kern == native
+    assert rows(True) == rows(False)
 
 
 def test_ivf_kmeans_quantizer_contract(vectors):
@@ -126,7 +141,7 @@ def test_embedding_dup_pairs(vectors):
 def test_ivf_kmeans_production_recall_gate(spark):
     """VERDICT r5 #6 — certify the PRODUCTION quantizer path end-to-end:
     ivf_centroids_kmeans (k-means|| on a seeded uniform sample) +
-    ivf_assign_kernel (matmul cell assignment) on the sf0.1 embeddings
+    ivf_topk's matmul cell assignment on the sf0.1 embeddings
     corpus, recall@10 >= 0.95 vs brute_force_topk.
 
     The truth set is a PLANTED-neighbor corpus (the repo's standard oracle
@@ -182,3 +197,89 @@ def test_ivf_kmeans_production_recall_gate(spark):
     }
     recall = len(truth & got) / len(truth)
     assert recall >= 0.95, f"planted recall@10 {recall:.4f} < 0.95"
+
+
+def test_pair_scoring_plans_have_no_interpreted_cosine(vectors):
+    for df in (
+        ann_topk(vectors, _queries(vectors), dim=DIM, k=3),
+        embedding_dup_pairs(vectors, dim=DIM),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString().lower()
+        assert "mapinpandas" in plan
+        assert "zip_with" not in plan and "lambdafunction" not in plan
+
+
+# ---------------------------------------------------------------- malformed
+# The rule (similarity module docstring): null and wrong-length corpus
+# vectors are dropped, zero-norm vectors get a null cosine (never a dup pair,
+# rank last), and null or wrong-length query vectors raise on the driver.
+
+MALFORMED = {
+    "null": [(900, None)],
+    "wrong_length": [(901, [1.0, 2.0, 3.0])],
+    "all_zero": [(902, [0.0] * DIM), (903, [0.0] * DIM)],
+}
+ZERO_QUERY = 904
+
+TOPK = {
+    "brute_force_topk": lambda v, q, k: brute_force_topk(v, q, k=k),
+    "ann_topk": lambda v, q, k: ann_topk(v, q, dim=DIM, k=k, n_tables=12, n_bits=8),
+    "ivf_topk": lambda v, q, k: ivf_topk(v, q, n_cells=6, nprobe=2, k=k),
+}
+
+
+def _with_rows(spark, df, rows, id_col):
+    extra = spark.createDataFrame(rows, f"{id_col} long, embedding array<double>")
+    return df.unionByName(extra)
+
+
+@pytest.mark.parametrize("kind", MALFORMED)
+@pytest.mark.parametrize("fn", TOPK)
+def test_topk_malformed_corpus_vectors(spark, vectors, fn, kind):
+    queries = _queries(vectors)
+    clean = sorted(tuple(r) for r in TOPK[fn](vectors, queries, 100).collect())
+    corpus = _with_rows(spark, vectors, MALFORMED[kind], "vec_id")
+    if kind == "all_zero":
+        queries = _with_rows(spark, queries, [(ZERO_QUERY, [0.0] * DIM)], "q_id")
+    got = sorted(tuple(r) for r in TOPK[fn](corpus, queries, 100).collect())
+    bad = {i for i, _ in MALFORMED[kind]} | {ZERO_QUERY}
+    # the valid rows rank exactly as without the malformed ones
+    assert [r for r in got if not bad & {r[0], r[1]}] == clean
+    assert not {900, 901} & {r[1] for r in got}
+    if kind == "all_zero":
+        zero = [r for r in got if bad & {r[0], r[1]}]
+        assert any(r[0] == ZERO_QUERY for r in zero)
+        assert all(r[2] is None for r in zero)
+        last = {}
+        for q, _, cos, rnk in got:
+            if cos is not None:
+                last[q] = max(last.get(q, 0), rnk)
+        assert all(r[3] > last.get(r[0], 0) for r in zero)
+
+
+@pytest.mark.parametrize("kind", MALFORMED)
+def test_embedding_dup_pairs_malformed_vectors(spark, vectors, kind):
+    def pairs(df):
+        dup = embedding_dup_pairs(df, dim=DIM, threshold=0.98, n_tables=12, n_bits=8)
+        return sorted(tuple(r) for r in dup.collect())
+
+    corpus = _with_rows(spark, vectors, MALFORMED[kind], "vec_id")
+    assert pairs(corpus) == pairs(vectors)
+
+
+@pytest.mark.parametrize("kind", ["null", "wrong_length"])
+@pytest.mark.parametrize("fn", TOPK)
+def test_malformed_query_vector_raises(spark, vectors, fn, kind):
+    bad = [(7_000, MALFORMED[kind][0][1])]
+    queries = _with_rows(spark, _queries(vectors), bad, "q_id")
+    with pytest.raises(ValueError, match="q_id=7000"):
+        TOPK[fn](vectors, queries, 3)
+
+
+@pytest.mark.parametrize("fn", TOPK)
+def test_query_set_cap(vectors, monkeypatch, fn):
+    monkeypatch.setattr(similarity, "MAX_QUERIES", 5)
+    TOPK[fn](vectors, _queries(vectors), 3)  # exactly the cap: accepted
+    monkeypatch.setattr(similarity, "MAX_QUERIES", 4)
+    with pytest.raises(ValueError, match="more than 4 query vectors"):
+        TOPK[fn](vectors, _queries(vectors), 3)
