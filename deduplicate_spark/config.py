@@ -163,11 +163,12 @@ class DedupConfig:
     # shuffle partitions by bytes (1 MB floor), which starves the CPU-bound
     # mapInPandas kernels of cores on small corpora (measured: 1-task
     # signature stages bounding the sf0.1 wall). None = AUTO off the same
-    # measured corpus stats as forced_smj: small corpora repartition the
-    # (tiny) kernel input to shuffle_partitions first; big corpora never
-    # pay the extra text shuffle. True/False pin it; operators treat None
-    # as False when called outside run_pipeline (scale-safe: no new
-    # exchange without a measurement).
+    # measured corpus stats as forced_smj: small corpora (under
+    # shuffle_partitions x 4 MB) repartition the (tiny) kernel input to one
+    # task per slot (defaultParallelism) first; big corpora never pay the
+    # extra text shuffle. True/False pin it; operators treat None as False
+    # when called outside run_pipeline (scale-safe: no new exchange without
+    # a measurement).
     kernel_small_corpus: bool | None = None
     # guard the internal_long_ids path: an xxhash64(conv_id) collision
     # silently merges two unrelated docs, and make_actions can then mark a
@@ -181,6 +182,9 @@ class DedupConfig:
     # --- empty-doc handling (zero_hash analog, dupe_analysis.py:31,335-340) ---
     empty_cluster: bool = True
 
+    # in the cascade this sizes only the kernel_small_corpus gate
+    # (shuffle_partitions x 4 MB); the Python kernel stages are spread to
+    # one task per slot (skew.spread_to_task_slots), not to this many
     shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:

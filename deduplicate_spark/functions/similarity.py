@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deduplicate_spark.operators.skew import spread_to_task_slots
+
 # the query set is collected to the driver and rides in every task's
 # closure: 100k queries at d=128 is ~100 MB of float64 per task
 MAX_QUERIES = 100_000
@@ -183,9 +185,8 @@ def _scan_top_k(
     # parallelism floor: a bench-scale corpus is one parquet split, which
     # would run the kernel on one core; at real scale the scan already has
     # >= cores splits and takes no extra exchange (guide §2.4)
-    want = vectors.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < want:
-        src = src.repartition(want)
+    if src.rdd.getNumPartitions() < src.sparkSession.sparkContext.defaultParallelism:
+        src = spread_to_task_slots(src)
     q_t = queries.schema[query_id_col].dataType.simpleString()
     v_t = vectors.schema[id_col].dataType.simpleString()
     scored = src.mapInPandas(kernel, f"q_id {q_t}, neighbor_id {v_t}, cosine double")

@@ -50,13 +50,32 @@ def measured_forced_smj(n_docs: int, total_bytes: int, config) -> bool:
 # kernel-parallelism floor gate (measured, small-corpus only): AQE coalesces
 # shuffle partitions by BYTES with a 1 MB floor, so a bench-scale corpus
 # (~25 MB of text) lands in 1-4 partitions — and the signature/winnowing
-# kernels, which cost ~100x a columnar scan per byte, then run on as many
-# CPU cores (measured at sf0.1/local[32]: the two kernel stages were 1-task,
-# 2.5-2.7 s-cpu each, bounding the whole pipeline wall). Below this gate an
-# explicit repartition of the kernel input costs one pass over a tiny table;
-# above it AQE's parallelism-first coalescing already yields >= one ~>=4 MB
-# partition per slot and the extra text shuffle would be a pure scale tax.
+# kernels, which cost ~100x a columnar scan per byte, would then run on as
+# many cores (measured at sf0.1: 1-task kernel stages of 2.5-2.7 s-cpu
+# each, bounding the whole pipeline wall). Below the gate
+# (``shuffle_partitions x 4 MB``, the only thing shuffle_partitions
+# sizes in the cascade) the kernel input is spread by :func:`spread_to_task_slots`,
+# one pass over a tiny table; above it AQE's parallelism-first coalescing
+# already yields >= one ~>=4 MB partition per slot and the extra text
+# shuffle would be a pure scale tax.
 _KERNEL_SMALL_BYTES_PER_SLOT = 4 << 20
+
+
+def spread_to_task_slots(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over one partition per task slot
+    (``defaultParallelism``) — the width of every CPU-bound Arrow kernel
+    stage the package spreads on purpose.
+
+    Count Python tasks, not partitions: each Python task pays a fixed
+    ~0.25 s before its first row (measured on Spark 4.1 / Python 3.11,
+    4 cores: the worker's ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, which re-reads the 1,328-entry
+    ``pyspark.zip`` directory once per cached zip importer, 14 of them).
+    More tasks than slots only multiply that cost: an identity
+    ``mapInPandas`` over the same 1.6k rows took 2.3-2.9 s at 32 partitions
+    against 0.37 s at 4, and the 32-task signature stage took 2.6-2.8 s of
+    job wall for 0.56 s of numpy work."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def measured_text_stats(

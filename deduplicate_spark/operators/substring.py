@@ -38,6 +38,7 @@ from deduplicate_spark.operators.skew import (
     maybe_merge_hint,
     measured_forced_smj,
     measured_small_corpus,
+    spread_to_task_slots,
     tag_bucket_stats,
 )
 from deduplicate_spark.lineage import cut_lineage
@@ -332,10 +333,11 @@ def substring_pairs(
     # kernel-parallelism floor (same measured gate as the signature kernel,
     # skew.measured_small_corpus): below the gate the filtered docs sit in
     # 1-4 byte-sized partitions and the CPU-bound winnowing kernel would
-    # run on as many cores; the repartition shuffles only a tiny table
+    # run on as many cores; spread them to one task per slot — the
+    # repartition shuffles only a tiny table
     fp_input = docs
     if config.kernel_small_corpus:
-        fp_input = fp_input.repartition(config.shuffle_partitions)
+        fp_input = spread_to_task_slots(fp_input)
     # EAGER lineage cut on the narrow (conv_id, fp) rows: tag_bucket_stats
     # consumes them twice (partial agg + join-back probe), and AQE
     # materializes the two join inputs as CONCURRENT query stages — with no
@@ -413,9 +415,10 @@ def substring_pairs(
 
     # AQE coalesces the (tiny-by-bytes) candidate set into one partition,
     # which would serialize the CPU-bound verify kernel into a single task
-    # — spread pairs across the configured parallelism first
+    # — spread pairs to one task per slot first (not more: each Python task
+    # pays a fixed start cost, see skew.spread_to_task_slots)
     return (
-        withtext.repartition(config.shuffle_partitions)
+        spread_to_task_slots(withtext)
         .mapInPandas(verify, f"a {id_type}, b {id_type}")
         .withColumn("evidence", F.lit("substring"))
     )

@@ -163,16 +163,79 @@ def test_measured_small_corpus_gate():
     assert not measured_small_corpus(1_600 * 1024 * 1024, cfg)  # 6.5M turns
 
 
-def test_kernel_parallelism_floor_applied_when_small(spark, turns_df):
+def test_kernel_parallelism_floor_applied_when_small(spark, turns_df, monkeypatch):
     """On a measured-small corpus the signature kernel input is spread to
-    shuffle_partitions tasks (the checkpointed signatures table carries the
-    repartitioned partitioning); pinned False leaves the plan untouched."""
+    one task per slot (defaultParallelism — not shuffle_partitions: every
+    Python task pays a fixed start cost, skew.spread_to_task_slots); pinned
+    False adds no floor repartition to the kernel input."""
+    import re
+
+    from deduplicate_spark import pipeline
+
+    # the checkpointed signatures table carries no lineage, so
+    # record the analyzed plan of each kernel input run_pipeline builds
+    plans = []
+    real = pipeline.compute_signatures
+
+    def spy(df, config):
+        plans.append(df._jdf.queryExecution().analyzed().toString())
+        return real(df, config)
+
+    monkeypatch.setattr(pipeline, "compute_signatures", spy)
+    slots = spark.sparkContext.defaultParallelism
+    assert slots != DedupConfig().shuffle_partitions  # the two widths differ
+    res = pipeline.run_pipeline(spark, turns_df, DedupConfig())  # auto: small
+    assert res.signatures.rdd.getNumPartitions() == slots
+    pipeline.run_pipeline(spark, turns_df, DedupConfig(kernel_small_corpus=False))
+    floor = re.compile(r"Repartition \d+, true")
+    on, off = plans
+    assert floor.findall(on) == [f"Repartition {slots}, true"]
+    assert not floor.search(off)
+
+
+def test_kernel_floor_and_shuffle_partitions_result_invariant(spark, turns_df):
+    """Physical knobs cannot change results: clusters and actions are
+    identical with the kernel floor on and off and with a gate sized by 4
+    or 32 shuffle_partitions (the substring pass rides along, so all three
+    spread Python kernels — signature, winnowing, verify — are covered)."""
     from deduplicate_spark.pipeline import run_pipeline
 
-    res = run_pipeline(spark, turns_df, DedupConfig())  # auto-resolves small
-    assert res.signatures.rdd.getNumPartitions() == DedupConfig().shuffle_partitions
-    res_off = run_pipeline(spark, turns_df, DedupConfig(kernel_small_corpus=False))
-    assert res_off.signatures.rdd.getNumPartitions() < DedupConfig().shuffle_partitions
+    def snap(small, parts):
+        cfg = DedupConfig(
+            exclude_roles=("system",),
+            enable_substring_pass=True,
+            kernel_small_corpus=small,
+            shuffle_partitions=parts,
+        )
+        res = run_pipeline(spark, turns_df, cfg)
+        return (
+            {(r.conv_id, r.cluster_id) for r in res.clusters.collect()},
+            {(r.conv_id, r.canonical_conv_id, r.action) for r in res.actions.collect()},
+        )
+
+    base = snap(True, 32)
+    assert len(base[0]) > 0 and len(base[1]) > 0
+    for small, parts in [(True, 4), (False, 32), (False, 4)]:
+        assert snap(small, parts) == base, (small, parts)
+
+
+def test_substring_pairs_floor_invariant(spark, turns_df):
+    """The winnowing-kernel floor only re-spreads rows: substring_pairs
+    returns the same pair set with it on and off."""
+    from dataclasses import replace
+
+    from deduplicate_spark.operators.assembly import assemble_docs
+
+    cfg = DedupConfig(exclude_roles=("system",), enable_substring_pass=True)
+    docs = assemble_docs(turns_df, cfg).select("conv_id", "doc_text").cache()
+
+    def pairs(small):
+        out = substring_pairs(docs, replace(cfg, kernel_small_corpus=small))
+        return {(r.a, r.b) for r in out.collect()}
+
+    on = pairs(True)
+    assert on and on == pairs(False)
+    docs.unpersist()
 
 
 def test_measured_text_stats_two_phase_bytes(spark):
